@@ -1,21 +1,28 @@
 """Two-phase distributed sketch aggregation — the heart of the library.
 
-Topology (SURVEY.md §3, §4.2):
+Every mergeable build entry point (``sketch_agg``, ``multi_sketch_agg``,
+``bloom_build_sharded``, ``checkpoint.checkpointed_sketch_agg`` and
+``streaming.incremental_sketch_sink``) is a thin caller of ONE phase-1
+fold and ONE phase-2 merge (SURVEY.md §3, §4.2):
 
-* **Phase 1 (partial)** — ``DataFrame.mapInArrow``: each input partition
-  streams through as Arrow record batches; a numpy kernel folds every
-  batch into a per-(partition, key) sketch state. Output: ONE tiny row
-  per partition per key ``(key, state binary, n_items, partition_id,
-  rows_consumed)``. This is map-side combine: whatever the row/key skew
-  of the input, the shuffle that follows carries only
+* **Phase 1 (partial)** — :func:`_fold`, one ``DataFrame.mapInArrow``
+  pass over a list of jobs: each input partition streams through as
+  Arrow record batches; every batch column is hashed once and folded by
+  a numpy kernel into a per-(partition, job, key) sketch state. A job's
+  key is a row column (null keys dropped) or, for the sharded Bloom,
+  ``shard_of(h1)`` of each element. Output: ONE tiny row per partition
+  per job per key ``(sketch_name?, key?, state binary, n_items,
+  partition_id, rows_consumed)``. This is map-side combine: whatever
+  the row/key skew of the input, the shuffle that follows carries only
   ``O(num_partitions × num_keys)`` sketch-sized rows — skew-immune by
   construction.
-* **Phase 2 (merge)** — ``groupBy(key).applyInPandas``: decode partial
-  states, fold with the sketch's merge law (max for HLL, add for CMS,
-  OR for Bloom; proven associative/commutative in tests), emit one row
-  per key. For very wide fan-in an optional intermediate tree level
-  merges ``partition_id % tree_fanout`` groups first — merge
-  associativity makes the tree shape irrelevant to the result.
+* **Phase 2 (merge)** — :func:`_merge`, ``groupBy(key cols)
+  .applyInPandas``: decode partial states, fold with the sketch's merge
+  law (max for HLL, add for CMS, OR for Bloom; proven
+  associative/commutative in tests), emit one row per key. For very
+  wide fan-in an optional intermediate level merges ``partition_id %
+  tree_fanout`` groups first (a partial reduce) — merge associativity
+  makes the tree shape irrelevant to the result.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`: phase 1 only
@@ -26,13 +33,14 @@ shard by the same hash, so N shards build and probe in parallel.
 
 Element extraction is Arrow-native: list columns are flattened via
 offset arithmetic (zero-copy), strings/binaries hashed through
-length-grouped fixed-width matrices. No per-row Python anywhere.
+length-grouped fixed-width matrices. Null scalar elements are skipped.
+No per-row Python anywhere.
 """
 
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -63,7 +71,7 @@ def _arrow_var_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         arr = arr.cast(pa.binary())
     elif pa.types.is_string(arr.type):
         arr = arr.cast(pa.binary())
-    # null-free assumption: sketch inputs are filtered upstream
+    # a null entry reads as b""; the build fold drops nulls before this
     offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
         arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
     data_buf = arr.buffers()[2]
@@ -165,7 +173,9 @@ def element_bytes(arr: pa.Array, element: str) -> list[bytes]:
 def _select_elems(elems, sel: np.ndarray):
     """Group-select from whatever :func:`element_values` returned:
     numpy fancy-index, Arrow take (string/binary — stays in C++), or a
-    Python-list gather (token_array rows)."""
+    Python-list gather (token_array rows); None stays None."""
+    if elems is None:
+        return None
     if isinstance(elems, np.ndarray):
         return elems[sel]
     if isinstance(elems, (pa.Array, pa.ChunkedArray)):
@@ -198,21 +208,21 @@ def infer_element(df: DataFrame, value_col: str, element: str | None) -> str:
 
 
 class _Spec:
-    """Per-kind plumbing: init/update/final for phase 1, merge for phase 2."""
+    """Per-kind plumbing over one element kind: init/update/finalize for
+    phase 1 (every kind hashes with metro)."""
 
-    def __init__(self, kind: str, algo: str, p: dict):
+    def __init__(self, kind: str, element: str, p: dict):
         self.kind = kind
-        self.algo = algo
+        self.element = element
         self.p = p
 
     @staticmethod
-    def make(kind: str, **p) -> "_Spec":
+    def make(kind: str, element: str, **p) -> "_Spec":
         if kind == "hll":
-            m = p.get("m", 16384)
-            if not params.is_power_of_two(m):
+            q = {"m": p.get("m", 16384)}
+            if not params.is_power_of_two(q["m"]):
                 raise ValueError("hll m must be a power of two")
-            return _Spec(kind, "metro", {"m": m})
-        if kind == "cms":
+        elif kind == "cms":
             if "d" in p:
                 d, w = p["d"], p["w"]
             elif "fail_prob" in p:
@@ -221,29 +231,29 @@ class _Spec:
             else:
                 d, w = params.cms_dims_from_estimates(p.get("eps", 0.001),
                                                       p.get("delta", 0.999))
-            return _Spec(kind, "metro", {"d": d, "w": w})
-        if kind == "bloom":
+            q = {"d": d, "w": w}
+        elif kind == "bloom":
             if "m" in p:
                 m, k = p["m"], p["k"]
             else:
                 m = params.bloom_filter_size(p["n"], p.get("eps", 0.01))
                 k = params.bloom_num_hashes(m, p["n"])
-            return _Spec(kind, "metro", {"m": m, "k": k})
-        if kind == "topk":
+            q = {"m": m, "k": k}
+        elif kind == "topk":
             d, w = params.cms_dims_from_error_bounds(p.get("eps", 0.0001),
                                                      p.get("fail_prob", 0.01))
-            return _Spec(kind, "metro", {"k": p.get("k", 10), "d": d, "w": w,
-                                         "slack": p.get("slack", 4),
-                                         "eps": p.get("eps", 0.0001),
-                                         "fail_prob": p.get("fail_prob", 0.01),
-                                         "max_distinct": p.get("max_distinct")})
-        if kind == "tdigest":
-            return _Spec(kind, "metro", {"delta": p.get("delta", 200.0)})
-        if kind == "kll":
-            return _Spec(kind, "metro", {"k": p.get("k", 200),
-                                         "seed": p.get("seed", 42)})
-        raise ValueError(f"sketch_agg does not handle kind {kind!r}"
-                         " (use cuckoo_build for cuckoo)")
+            q = {"k": p.get("k", 10), "d": d, "w": w,
+                 "slack": p.get("slack", 4), "eps": p.get("eps", 0.0001),
+                 "fail_prob": p.get("fail_prob", 0.01),
+                 "max_distinct": p.get("max_distinct")}
+        elif kind == "tdigest":
+            q = {"delta": p.get("delta", 200.0)}
+        elif kind == "kll":
+            q = {"k": p.get("k", 200), "seed": p.get("seed", 42)}
+        else:
+            raise ValueError(f"sketch_agg does not handle kind {kind!r}"
+                             " (use cuckoo_build for cuckoo)")
+        return _Spec(kind, element, q)
 
     # -- phase 1 ---------------------------------------------------------
 
@@ -274,8 +284,6 @@ class _Spec:
             return [m, w, 0]
         if self.kind == "kll":
             return [kll.KLL(p["k"], p["seed"]), 0]
-
-    element: str = "string"  # set by _build_partials before use
 
     def update(self, acc, h1, h2, elems=None, weights=None):
         p = self.p
@@ -398,32 +406,94 @@ def merge_sketch_states(blobs) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# phase 1: mapInArrow partial builder
+# phase 1: the one mapInArrow fold
 # ---------------------------------------------------------------------------
 
-
-def _partial_schema(df: DataFrame, key_col: str | None) -> StructType:
-    fields = []
-    if key_col:
-        fields.append(df.schema[key_col])
-    fields += [StructField("state", BinaryType(), False),
-               StructField("n_items", LongType(), False),
-               StructField("partition_id", IntegerType(), False),
-               StructField("rows_consumed", LongType(), False)]
-    return StructType(fields)
+_SCALAR = ("int32", "int64", "float64", "string", "binary")
 
 
-def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
-                    key_col: str | None, element: str,
-                    skip_partitions: frozenset[int] = frozenset(),
-                    weight_col: str | None = None) -> DataFrame:
-    out_schema = _partial_schema(df, key_col)
-    cols = ([key_col] if key_col else []) + [value_col]
-    if weight_col:
-        cols.append(weight_col)
-    algo = spec.algo
-    spec.element = element
-    needs_elems = spec.needs_elements()
+class _Job(NamedTuple):
+    """One sketch of a :func:`_fold`. It is keyed by the row column
+    ``key_col``, or by ``shard_of(h1, n_shards)`` of each element (every
+    shard pre-seeded, so each partition emits all ``n_shards`` rows), or
+    by nothing (one global sketch)."""
+    spec: _Spec
+    value_col: str
+    name: str | None = None
+    key_col: str | None = None
+    n_shards: int | None = None
+    weight_col: str | None = None
+
+
+def _batch_elements(arr: pa.Array, element: str, needs_elems: bool):
+    """``(h1, h2, elems, rowmap)`` of one batch column: hashes for the
+    hashed kinds, raw values for the counting ones (top-k, quantiles).
+    ``rowmap[i]`` is the source row of element i (None: identity). Null
+    scalar elements are skipped, as null keys are."""
+    rowmap = None
+    if element in _SCALAR and arr.null_count:
+        rowmap = np.flatnonzero(arr.is_valid().to_numpy(zero_copy_only=False))
+        arr = arr.drop_null()
+    if needs_elems:
+        # Top-K counts exact values; the CMS is built from the counter
+        # at finalize — no per-element hashing here
+        elems = element_values(arr, element)
+        if element == "tokens":
+            _, offsets = _arrow_list_ints(arr)
+            rowmap = np.repeat(np.arange(len(arr)), np.diff(offsets))
+        return None, None, elems, rowmap
+    h1, h2, flat_rows = extract_hashes(arr, element, "metro")
+    return h1, h2, None, rowmap if flat_rows is None else flat_rows
+
+
+class _Groups:
+    """One batch's element → key grouping. ``ecodes[i]`` is element i's
+    key code (-1: dropped); ``row_counts`` counts rows per key. The
+    stable group sort is built on first use and shared by every job on
+    the same columns."""
+
+    def __init__(self, keys, ecodes: np.ndarray, row_codes: np.ndarray):
+        self.keys = keys
+        self.ecodes = ecodes
+        self.row_counts = np.bincount(row_codes[row_codes >= 0],
+                                      minlength=len(keys)).tolist()
+        self._sel = None
+
+    def selections(self):
+        if self._sel is None:
+            order = np.argsort(self.ecodes, kind="stable")
+            bounds = np.append(np.searchsorted(self.ecodes[order],
+                                               np.arange(len(self.keys))),
+                               len(self.ecodes))
+            self._sel = [order[bounds[g]:bounds[g + 1]]
+                         for g in range(len(self.keys))]
+        return zip(self.keys, self._sel)
+
+
+def _fold(df: DataFrame, jobs: list[_Job], key_field: StructField | None,
+          skip_partitions: frozenset[int] = frozenset()) -> DataFrame:
+    """Phase 1 of every build: fold ``jobs`` in ONE ``mapInArrow`` pass.
+
+    Each batch column is hashed (or its values extracted) once per
+    (column, element kind), each key column factorized once, and each
+    group sort shared by every job on the same (key, value) columns.
+    Keyed HLL folds every key in one :class:`hll.KeyedHLL` matrix.
+
+    Returns ``[sketch_name?, key?, state, n_items, partition_id,
+    rows_consumed]``: ``sketch_name`` when the jobs are named, the key
+    under ``key_field`` (stringified when that field is a string)."""
+    named = jobs[0].name is not None
+    stringify = (key_field is not None
+                 and isinstance(key_field.dataType, StringType))
+    out_schema = StructType(
+        ([StructField("sketch_name", StringType(), False)] if named else [])
+        + ([key_field] if key_field else [])
+        + [StructField("state", BinaryType(), False),
+           StructField("n_items", LongType(), False),
+           StructField("partition_id", IntegerType(), False),
+           StructField("rows_consumed", LongType(), False)])
+    in_cols = list(dict.fromkeys(
+        c for j in jobs for c in (j.key_col, j.value_col, j.weight_col) if c))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -432,98 +502,99 @@ def _build_partials(df: DataFrame, spec: _Spec, value_col: str,
             # resume path: this partition's partial is already checkpointed
             # (real deployments prune at the source/manifest level instead)
             return
-        accs: dict = {}
-        rows_by_key: dict = {}
-        # fine-grained-key fast path: one vectorized update per batch
-        # instead of a python loop over keys (see kernels.hll.KeyedHLL)
-        keyed_hll = (hll.KeyedHLL(spec.p["m"])
-                     if key_col and spec.kind == "hll" else None)
+        accs: dict = {}  # (job index, key) -> accumulator
+        rows: dict = {}  # (job index, key) -> rows consumed
+        keyed_hll = {i: hll.KeyedHLL(j.spec.p["m"]) for i, j in enumerate(jobs)
+                     if j.spec.kind == "hll" and j.key_col}
+        for i, j in enumerate(jobs):
+            for s in range(j.n_shards or 0):
+                accs[(i, s)], rows[(i, s)] = j.spec.init(), 0
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            varr = batch.column(value_col)
-            if needs_elems:
-                # Top-K counts exact values; the CMS is built from the
-                # counter at finalize — no per-element hashing here
-                elems = element_values(varr, element)
-                if element == "tokens":
-                    _, offsets = _arrow_list_ints(varr)
-                    rowmap = np.repeat(np.arange(batch.num_rows),
-                                       np.diff(offsets))
+            elements: dict = {}
+            factorized: dict = {}
+            groups: dict = {}
+            for i, (spec, vcol, _, kcol, n_shards, wcol) in enumerate(jobs):
+                ek = (vcol, spec.element, spec.needs_elements())
+                if ek not in elements:
+                    elements[ek] = _batch_elements(batch.column(vcol), *ek[1:])
+                h1, h2, elems, rowmap = elements[ek]
+                w = None
+                if wcol:
+                    w = batch.column(wcol).to_numpy(
+                        zero_copy_only=False).astype(np.float64)
+                    # exploded elements carry their row's weight
+                    w = w if rowmap is None else w[rowmap]
+                if kcol is None and not n_shards:
+                    spec.update(accs.setdefault((i, None), spec.init()),
+                                h1, h2, elems, w)
+                    rows[(i, None)] = rows.get((i, None), 0) + batch.num_rows
+                    continue
+                if n_shards:
+                    gk = (ek, n_shards)
+                    if gk not in groups:
+                        shard = hashing.shard_of(h1, n_shards)
+                        groups[gk] = _Groups(range(n_shards), shard, shard)
                 else:
-                    rowmap = None
-                h1 = h2 = np.zeros(len(elems), dtype=np.uint64)
-            else:
-                h1, h2, rowmap = extract_hashes(varr, element, algo)
-                elems = None
-            if weight_col is not None:
-                wvals = batch.column(weight_col) \
-                    .to_numpy(zero_copy_only=False).astype(np.float64)
-                # tokens explode per row: each token carries its row's
-                # weight (rowmap gathers the per-row weight per element)
-                welems = wvals if rowmap is None else wvals[rowmap]
-            else:
-                welems = None
-            if key_col is None:
-                acc = accs.setdefault(None, spec.init())
-                spec.update(acc, h1, h2, elems, welems)
-                rows_by_key[None] = rows_by_key.get(None, 0) + batch.num_rows
-            elif keyed_hll is not None:
-                keys = batch.column(key_col).to_pandas()
-                codes, uniques = pd.factorize(keys, sort=False)
-                ecodes = codes if rowmap is None else codes[rowmap]
-                keep = ecodes >= 0  # null keys dropped (as in loop path)
-                keyed_hll.update(list(uniques), ecodes[keep], h1[keep])
-                rc = np.bincount(codes[codes >= 0], minlength=len(uniques))
-                for u in np.nonzero(rc)[0].tolist():
-                    k = uniques[u]
-                    rows_by_key[k] = rows_by_key.get(k, 0) + int(rc[u])
-            else:
-                keys = batch.column(key_col).to_pandas()
-                codes, uniques = pd.factorize(keys, sort=False)
-                ecodes = codes if rowmap is None else codes[rowmap]
-                order = np.argsort(ecodes, kind="stable")
-                bounds = np.searchsorted(ecodes[order], np.arange(len(uniques)))
-                bounds = np.append(bounds, len(ecodes))
-                # one O(rows) pass instead of an O(keys·rows) scan-per-key
-                row_counts = np.bincount(codes[codes >= 0],
-                                         minlength=len(uniques))
-                for g, key in enumerate(uniques):
-                    sel = order[bounds[g]:bounds[g + 1]]
-                    acc = accs.setdefault(key, spec.init())
-                    if needs_elems:
-                        grp = _select_elems(elems, sel)
-                    else:
-                        grp = None
-                    spec.update(acc, h1[sel], h2[sel], grp,
-                                None if welems is None else welems[sel])
-                    rows_by_key[key] = rows_by_key.get(key, 0) + int(
-                        row_counts[g])
-        out_rows = []
-        if keyed_hll is not None:
-            from gostatix_spark.state import HLLState
-            for key, regs, n_items in keyed_hll.states():
-                out_rows.append({
-                    key_col: key,
-                    # sparse partial frames (state.py v2): fine-grained
-                    # keys leave most of the m registers zero, and these
-                    # rows exist only to be shuffled into phase 2
-                    "state": HLLState(spec.p["m"], regs,
-                                      n_items).to_bytes(sparse=True),
-                    "n_items": n_items, "partition_id": pid,
-                    "rows_consumed": rows_by_key[key]})
-        for key, acc in accs.items():
-            blob, n_items = spec.finalize(acc)
-            row = {"state": blob, "n_items": n_items,
-                   "partition_id": pid, "rows_consumed": rows_by_key[key]}
-            if key_col:
-                row[key_col] = key
-            out_rows.append(row)
-        if out_rows:
+                    if kcol not in factorized:
+                        factorized[kcol] = pd.factorize(
+                            batch.column(kcol).to_pandas(), sort=False)
+                    codes, uniques = factorized[kcol]
+                    # The cache key MUST include whether the job's
+                    # elements are flattened or filtered rows (rowmap is
+                    # not None): a flattened job (e.g. HLL over 'tokens')
+                    # and a per-row job (e.g. Bloom over 'token_array')
+                    # on the SAME columns group arrays of different
+                    # lengths — sharing them would misgroup sketches or
+                    # raise IndexError.
+                    gk = (kcol, vcol, rowmap is not None)
+                    if gk not in groups:
+                        ecodes = codes if rowmap is None else codes[rowmap]
+                        groups[gk] = _Groups(uniques, ecodes, codes)
+                g = groups[gk]
+                if i in keyed_hll:
+                    keep = g.ecodes >= 0  # null keys dropped
+                    keyed_hll[i].update(g.keys, g.ecodes[keep], h1[keep])
+                else:
+                    for key, sel in g.selections():
+                        spec.update(accs.setdefault((i, key), spec.init()),
+                                    *(_select_elems(a, sel)
+                                      for a in (h1, h2, elems, w)))
+                for key, n in zip(g.keys, g.row_counts):
+                    rows[(i, key)] = rows.get((i, key), 0) + n
+        for i, kh in keyed_hll.items():
+            accs.update(((i, key), [regs, n]) for key, regs, n in kh.states())
+        out = []
+        for (i, key), acc in accs.items():
+            blob, n_items = jobs[i].spec.finalize(acc)
+            row = {"state": blob, "n_items": n_items, "partition_id": pid,
+                   "rows_consumed": rows[(i, key)]}
+            if named:
+                row["sketch_name"] = jobs[i].name
+            if key_field:
+                row[key_field.name] = (str(key) if stringify
+                                       and key is not None else key)
+            out.append(row)
+        if out:
             yield from pa.Table.from_pylist(
-                out_rows, schema=_to_arrow_schema(out_schema)).to_batches()
+                out, schema=_to_arrow_schema(out_schema)).to_batches()
 
-    return df.select(*cols).mapInArrow(fn, out_schema)
+    return df.select(*in_cols).mapInArrow(fn, out_schema)
+
+
+def _partials(df: DataFrame, kind: str, value_col: str, *,
+              key_col: str | None = None, element: str | None = None,
+              weight_col: str | None = None,
+              skip_partitions: frozenset[int] = frozenset(),
+              **sketch_params) -> DataFrame:
+    """Phase-1 partials of one sketch per value of the typed ``key_col``
+    — the fold used by ``sketch_agg``, checkpoint and streaming."""
+    spec = _Spec.make(kind, infer_element(df, value_col, element),
+                      **sketch_params)
+    return _fold(df, [_Job(spec, value_col, key_col=key_col,
+                           weight_col=weight_col)],
+                 df.schema[key_col] if key_col else None, skip_partitions)
 
 
 def _to_arrow_schema(st: StructType) -> pa.Schema:
@@ -532,77 +603,62 @@ def _to_arrow_schema(st: StructType) -> pa.Schema:
 
 
 # ---------------------------------------------------------------------------
-# phase 2: tree merge
+# phase 2: the one merge
 # ---------------------------------------------------------------------------
 
 
-def _merge_partials(partials: DataFrame, key_col: str | None,
-                    tree_fanout: int | None,
-                    merge_buckets: int | None = None) -> DataFrame:
-    key_cols = [key_col] if key_col else []
-    out_fields = ([partials.schema[key_col]] if key_col else []) + [
+def _merge(partials: DataFrame, key_cols: list[str],
+           tree_fanout: int | None = None,
+           merge_buckets: int | None = None) -> DataFrame:
+    """Phase 2 of every build: one row per ``key_cols`` group,
+    ``[*key_cols, state, n_items, n_partials]``.
+
+    ``tree_fanout`` adds an intermediate level that merges within
+    (key, ``partition_id % tree_fanout``) first — the partial-reduce
+    pattern for wide fan-in. ``merge_buckets`` hashes keys into that
+    many groups so each ``applyInPandas`` call merges many fine-grained
+    keys in a tight loop instead of paying ~ms of pandas overhead per
+    key."""
+    glob = not key_cols
+    if glob:
+        partials = partials.withColumn("_g", F.lit(1))
+        key_cols = ["_g"]
+    out_schema = StructType([partials.schema[k] for k in key_cols] + [
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
-        StructField("n_partials", LongType(), False),
-    ]
-    out_schema = StructType(out_fields)
+        StructField("n_partials", LongType(), False)])
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_sketch_states(pdf["state"].tolist())
-        row = {"state": blob, "n_items": int(pdf["n_items"].sum()),
-               "n_partials": int(pdf["n_partials"].sum()
-                                 if "n_partials" in pdf else len(pdf))}
-        for kc in key_cols:
-            row[kc] = pdf[kc].iloc[0]
-        return pd.DataFrame([row])
+    def merged(pdf: pd.DataFrame, cols: list[str]) -> dict:
+        return {**{c: pdf[c].iloc[0] for c in cols},
+                "state": merge_sketch_states(pdf["state"].tolist()),
+                "n_items": int(pdf["n_items"].sum()),
+                "n_partials": int(pdf["n_partials"].sum()
+                                  if "n_partials" in pdf else len(pdf))}
 
     if tree_fanout:
-        # intermediate level: merge within (key, partition_id % fanout)
-        inter_schema = StructType(list(out_schema.fields)
-                                  + [StructField("_salt", IntegerType(), False)])
-
-        def inter_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_fn(pdf)
-            out["_salt"] = pdf["_salt"].iloc[0]
-            return out
-
-        salted = partials.withColumn(
-            "_salt", (F.col("partition_id") % tree_fanout).cast("int"))
-        level1 = salted.groupBy(*key_cols, "_salt").applyInPandas(
-            inter_fn, inter_schema)
-        partials = level1
-
-    if key_cols and merge_buckets:
-        # many-fine-grained-keys path: one applyInPandas call per key
-        # costs ~ms of pandas overhead; bucket keys by hash so each
-        # call merges ~n_keys/merge_buckets keys in a tight loop
-        def bucket_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for key, g in pdf.groupby(key_cols[0], dropna=False, sort=False):
-                rows.append({
-                    key_cols[0]: key,
-                    "state": merge_sketch_states(g["state"].tolist()),
-                    "n_items": int(g["n_items"].sum()),
-                    "n_partials": len(g)})
-            return pd.DataFrame(rows)
-
-        return (partials
-                .withColumn("_kb", F.pmod(F.hash(*key_cols),
-                                          F.lit(merge_buckets)))
-                .groupBy("_kb")
-                .applyInPandas(lambda pdf: bucket_merge(pdf), out_schema))
-
-    if key_cols:
-        return partials.groupBy(*key_cols).applyInPandas(merge_fn, out_schema)
-
-    def merge_fn_g(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge_fn(pdf)
-        out["_g"] = 1
-        return out
-
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        merge_fn_g, StructType([StructField("_g", IntegerType(), False)]
-                               + list(out_schema.fields))).drop("_g")
+        salted = key_cols + ["_salt"]
+        partials = (partials
+                    .withColumn("_salt", (F.col("partition_id") % tree_fanout)
+                                .cast("int"))
+                    .groupBy(*salted)
+                    .applyInPandas(
+                        lambda pdf: pd.DataFrame([merged(pdf, salted)]),
+                        StructType(out_schema.fields
+                                   + [StructField("_salt", IntegerType(),
+                                                  False)])))
+    if merge_buckets and not glob:
+        out = (partials
+               .withColumn("_kb", F.pmod(F.hash(*key_cols),
+                                         F.lit(merge_buckets)))
+               .groupBy("_kb")
+               .applyInPandas(lambda pdf: pd.DataFrame(
+                   [merged(g, key_cols) for _, g in
+                    pdf.groupby(key_cols, dropna=False, sort=False)]),
+                   out_schema))
+    else:
+        out = partials.groupBy(*key_cols).applyInPandas(
+            lambda pdf: pd.DataFrame([merged(pdf, key_cols)]), out_schema)
+    return out.drop("_g") if glob else out
 
 
 # ---------------------------------------------------------------------------
@@ -643,171 +699,39 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     the same input is needed anyway. Only ``cms`` is count-linear, so
     other kinds reject ``weight_col``.
     """
-    element = infer_element(df, value_col, element)
-    spec = _Spec.make(kind, **sketch_params)
     if weight_col is not None and kind != "cms":
         raise ValueError(
             f"weight_col is only meaningful for kind='cms' (the"
             f" count-linear sketch; reference Update(data, count)) —"
             f" got kind={kind!r}")
-    partials = _build_partials(df, spec, value_col, key_col, element,
-                               weight_col=weight_col)
+    partials = _partials(df, kind, value_col, key_col=key_col,
+                         element=element, weight_col=weight_col,
+                         **sketch_params)
     if _return_partials:
         return partials
-    return _merge_partials(partials, key_col, tree_fanout, merge_buckets)
+    return _merge(partials, [key_col] if key_col else [], tree_fanout,
+                  merge_buckets)
 
 
 def multi_sketch_agg(df: DataFrame, jobs: list[dict],
                      tree_fanout: int | None = None) -> DataFrame:
     """Build MANY sketches in ONE scan — the 100 TB shape: the input is
     read once, each Arrow batch is hashed once per distinct
-    (column, element, algo) and folded into every requested sketch.
+    (column, element kind) and folded into every requested sketch.
 
     ``jobs``: list of dicts ``{name, kind, value_col, key_col?,
     element?, params?}``. Keys are stringified into a uniform ``key``
     column (null for global sketches). Returns
     ``DataFrame[sketch_name, key, state, n_items, n_partials]``.
     """
-    specs: dict[str, _Spec] = {}
-    meta: dict[str, tuple[str, str | None, str]] = {}
-    for j in jobs:
-        name = j["name"]
-        element = infer_element(df, j["value_col"], j.get("element"))
-        spec = _Spec.make(j["kind"], **j.get("params", {}))
-        spec.element = element
-        specs[name] = spec
-        meta[name] = (j["value_col"], j.get("key_col"), element)
-
-    in_cols = sorted({m[0] for m in meta.values()}
-                     | {m[1] for m in meta.values() if m[1]})
-    out_schema = StructType([
-        StructField("sketch_name", StringType(), False),
-        StructField("key", StringType(), True),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_consumed", LongType(), False)])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        accs: dict[tuple[str, str | None], list] = {}
-        rows_seen: dict[tuple[str, str | None], int] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            hash_cache: dict = {}
-            elem_cache: dict = {}
-            key_cache: dict = {}
-            group_cache: dict = {}  # (kcol, vcol): per-key selection arrays
-            for name, spec in specs.items():
-                vcol, kcol, element = meta[name]
-                if spec.needs_elements():
-                    ck = (vcol, element, "vals")
-                    if ck not in elem_cache:
-                        varr = batch.column(vcol)
-                        elem_cache[ck] = element_values(varr, element)
-                    elems = elem_cache[ck]
-                    if element == "tokens":
-                        _, offs = _arrow_list_ints(batch.column(vcol))
-                        rowmap = np.repeat(np.arange(batch.num_rows),
-                                           np.diff(offs))
-                    else:
-                        rowmap = None
-                    h1 = h2 = np.zeros(len(elems), dtype=np.uint64)
-                else:
-                    ck = (vcol, element, spec.algo)
-                    if ck not in hash_cache:
-                        hash_cache[ck] = extract_hashes(
-                            batch.column(vcol), element, spec.algo)
-                    h1, h2, rowmap = hash_cache[ck]
-                    elems = None
-                if kcol is None:
-                    acc = accs.setdefault((name, None), spec.init())
-                    spec.update(acc, h1, h2, elems)
-                    rows_seen[(name, None)] = rows_seen.get((name, None), 0) \
-                        + batch.num_rows
-                else:
-                    if kcol not in key_cache:
-                        keys = batch.column(kcol).to_pandas()
-                        key_cache[kcol] = pd.factorize(keys, sort=False)
-                    codes, uniques = key_cache[kcol]
-                    # the group sort over element codes (12M-element
-                    # argsort for token columns) is shared by every job
-                    # on the same (key col, value col) — e.g. per-source
-                    # HLL and CMS over tokens sort once, not twice.
-                    # The cache key MUST include whether the job's element
-                    # kind flattens rows (rowmap is not None): a flattened
-                    # job (e.g. HLL over 'tokens') and a per-row job (e.g.
-                    # Bloom over 'token_array') on the SAME columns build
-                    # selection arrays of different lengths — sharing them
-                    # would misgroup sketches or raise IndexError.
-                    gk = (kcol, vcol, rowmap is not None)
-                    if gk not in group_cache:
-                        ecodes = codes if rowmap is None else codes[rowmap]
-                        order = np.argsort(ecodes, kind="stable")
-                        bounds = np.searchsorted(ecodes[order],
-                                                 np.arange(len(uniques)))
-                        bounds = np.append(bounds, len(ecodes))
-                        row_counts = np.bincount(codes[codes >= 0],
-                                                 minlength=len(uniques))
-                        group_cache[gk] = (order, bounds, row_counts)
-                    order, bounds, row_counts = group_cache[gk]
-                    for g, key in enumerate(uniques):
-                        sel = order[bounds[g]:bounds[g + 1]]
-                        acc = accs.setdefault((name, str(key)), spec.init())
-                        grp = None
-                        if elems is not None:
-                            grp = _select_elems(elems, sel)
-                        spec.update(acc, h1[sel], h2[sel], grp)
-                        rows_seen[(name, str(key))] = rows_seen.get(
-                            (name, str(key)), 0) + int(row_counts[g])
-        if accs:
-            out = []
-            for (name, key), acc in accs.items():
-                blob, n_items = specs[name].finalize(acc)
-                out.append({"sketch_name": name, "key": key, "state": blob,
-                            "n_items": n_items, "partition_id": pid,
-                            "rows_consumed": rows_seen[(name, key)]})
-            yield from pa.Table.from_pylist(
-                out, schema=_to_arrow_schema(out_schema)).to_batches()
-
-    partials = df.select(*in_cols).mapInArrow(fn, out_schema)
-
-    merge_schema = StructType([
-        StructField("sketch_name", StringType(), False),
-        StructField("key", StringType(), True),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("n_partials", LongType(), False)])
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = merge_sketch_states(pdf["state"].tolist())
-        return pd.DataFrame([{
-            "sketch_name": pdf["sketch_name"].iloc[0],
-            "key": pdf["key"].iloc[0],
-            "state": blob,
-            "n_items": int(pdf["n_items"].sum()),
-            "n_partials": int(pdf["n_partials"].sum()
-                              if "n_partials" in pdf else len(pdf))}])
-
-    if tree_fanout:
-        inter_schema = StructType(list(merge_schema.fields)
-                                  + [StructField("_salt", IntegerType(), False)])
-
-        def inter_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge_fn(pdf)
-            out["_salt"] = int(pdf["_salt"].iloc[0])
-            return out
-
-        partials = (partials
-                    .withColumn("_salt", (F.col("partition_id") % tree_fanout)
-                                .cast("int"))
-                    .groupBy("sketch_name", "key", "_salt")
-                    .applyInPandas(inter_fn, inter_schema))
-
-    grouped = partials.groupBy("sketch_name", "key")
-    return grouped.applyInPandas(merge_fn, merge_schema)
+    fold_jobs = [
+        _Job(_Spec.make(j["kind"],
+                        infer_element(df, j["value_col"], j.get("element")),
+                        **j.get("params", {})),
+             j["value_col"], name=j["name"], key_col=j.get("key_col"))
+        for j in jobs]
+    partials = _fold(df, fold_jobs, StructField("key", StringType(), True))
+    return _merge(partials, ["sketch_name", "key"], tree_fanout)
 
 
 def _element_hashes_df(df: DataFrame, value_col: str, key_col: str | None,
@@ -1013,49 +937,9 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
 
     Returns ``DataFrame[shard int, state, n_items, n_partials]``.
     """
-    element = infer_element(df, value_col, element)
     n_per = max(1, -(-n // n_shards))
-    m = params.bloom_filter_size(n_per, eps)
-    k = params.bloom_num_hashes(m, n_per)
-
-    out_schema = StructType([
-        StructField("shard", IntegerType(), False),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_consumed", LongType(), False)])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        words = [bloom.new_state(m) for _ in range(n_shards)]
-        items = np.zeros(n_shards, dtype=np.int64)
-        rows = 0
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h1, h2, _ = extract_hashes(batch.column(value_col), element,
-                                       "metro")
-            shard = hashing.shard_of(h1, n_shards)
-            order = np.argsort(shard, kind="stable")
-            counts = np.bincount(shard, minlength=n_shards)
-            off = 0
-            for s in range(n_shards):
-                c = int(counts[s])
-                if c:
-                    sel = order[off:off + c]
-                    bloom.insert_batch(words[s], h1[sel], h2[sel], k, m)
-                    items[s] += c
-                off += c
-            rows += batch.num_rows
-        out = [{"shard": s,
-                "state": BloomState(m, k, words[s], int(items[s])).to_bytes(),
-                "n_items": int(items[s]), "partition_id": pid,
-                "rows_consumed": rows}
-               for s in range(n_shards)]
-        if out:
-            yield from pa.Table.from_pylist(
-                out, schema=_to_arrow_schema(out_schema)).to_batches()
-
-    partials = df.select(value_col).mapInArrow(fn, out_schema)
-    return _merge_partials(partials, "shard", tree_fanout)
+    spec = _Spec.make("bloom", infer_element(df, value_col, element),
+                      n=n_per, eps=eps)
+    partials = _fold(df, [_Job(spec, value_col, n_shards=n_shards)],
+                     StructField("shard", IntegerType(), False))
+    return _merge(partials, ["shard"], tree_fanout)

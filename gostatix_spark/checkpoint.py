@@ -12,7 +12,7 @@ n_items, state)``
 written as parquet. Resume reads the checkpoint, determines which input
 partitions already contributed (lineage = ``partition_id`` +
 ``rows_consumed``), re-runs phase 1 **only on the missing partitions**
-(via ``rdd.mapPartitionsWithIndex`` partition pruning — no data shuffle,
+(the phase-1 fold skips checkpointed partition ids — no data shuffle,
 the surviving partials are never recomputed), then merges old + new
 partials. Merge associativity/commutativity (tested) makes the
 two-source fold equal to the uninterrupted build; for HLL/Bloom,
@@ -27,9 +27,10 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gostatix_spark.agg import _merge_partials, _Spec, _build_partials, infer_element
+from gostatix_spark.agg import _merge, _partials
 
 __all__ = ["checkpointed_sketch_agg", "write_partials", "resume_from_checkpoint"]
 
@@ -55,7 +56,11 @@ def completed_partitions(spark: SparkSession, path: str,
     the new kind and return an empty build."""
     try:
         cp = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        # only a checkpoint that does not exist yet means "nothing done";
+        # an unreadable one must not silently rerun and append to it
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return []
     if kind is not None:
         cp = cp.where(F.col("sketch_kind") == kind)
@@ -78,12 +83,10 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     mid-build (FIXTURES.md F4 ``resume_sim``).
     """
     spark = df.sparkSession
-    element = infer_element(df, value_col, element)
-    spec = _Spec.make(kind, **sketch_params)
-
     done = frozenset(completed_partitions(spark, checkpoint_path, kind))
-    partials = _build_partials(df, spec, value_col, key_col, element,
-                               skip_partitions=done)
+    partials = _partials(df, kind, value_col, key_col=key_col,
+                         element=element, skip_partitions=done,
+                         **sketch_params)
     if fail_after_partition is not None:
         # test hook: pretend every partition after the limit was lost
         partials = partials.where(
@@ -97,4 +100,4 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     # one contribution per partition (idempotent re-runs may append dupes)
     keyc = [key_col] if key_col else []
     dedup = all_partials.dropDuplicates(keyc + ["partition_id"])
-    return _merge_partials(dedup, key_col, tree_fanout)
+    return _merge(dedup, keyc, tree_fanout)

@@ -16,13 +16,18 @@ copy-on-write: a fresh worker then costs milliseconds. Activated via
 daemon's PYTHONPATH via ``spark.executorEnv.PYTHONPATH``.
 
 Imports are best-effort: a missing optional module must never stop the
-daemon from coming up (worker creation would fail cluster-wide).
+daemon from coming up (worker creation would fail cluster-wide); each
+failed import is reported on stderr. BLAS/OpenMP pools default to one
+thread before numpy loads: every forked worker is one task slot, and a
+per-worker pool sized to the host would oversubscribe it.
 """
 from __future__ import annotations
 
 import importlib
+import os
+import sys
 
-for _mod in (
+PRELOAD = (
     "numpy",
     "pandas",
     "pyarrow",
@@ -38,11 +43,21 @@ for _mod in (
     "gostatix_spark.kernels.topk",
     "gostatix_spark.kernels.tdigest",
     "gostatix_spark.kernels.kll",
-):
-    try:
-        importlib.import_module(_mod)
-    except Exception:  # pragma: no cover — preload is strictly optional
-        pass
+)
+
+
+def preload(modules) -> None:
+    for mod in modules:
+        try:
+            importlib.import_module(mod)
+        except Exception as e:  # preload is strictly optional
+            print(f"daemon_preload: cannot preload {mod}: {e!r}",
+                  file=sys.stderr)
+
+
+for _var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS"):
+    os.environ.setdefault(_var, "1")
+preload(PRELOAD)
 
 from pyspark.daemon import manager  # noqa: E402  (argv-sensitive import)
 

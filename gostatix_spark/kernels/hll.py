@@ -99,16 +99,15 @@ class KeyedHLL:
         slot_of_code = np.array([self._slot(k) for k in keys_unique],
                                 dtype=np.int64)
         slots = slot_of_code[codes]
-        idx, rank = index_and_rank(h1, self.m)
         flat = self.mat.reshape(-1)
         for s in range(0, len(h1), _CHUNK):
             e = s + _CHUNK
-            np.maximum.at(flat, slots[s:e] * self.m + idx[s:e], rank[s:e])
-        uniq, cnt = np.unique(slots, return_counts=True)
-        inv_slot = {v: k for k, v in self.slots.items()}
-        for u, c in zip(uniq.tolist(), cnt.tolist()):
-            k = inv_slot[u]
-            self.n_items[k] = self.n_items.get(k, 0) + c
+            idx, rank = index_and_rank(h1[s:e], self.m)
+            np.maximum.at(flat, slots[s:e] * self.m + idx, rank)
+        counts = np.bincount(codes, minlength=len(keys_unique)).tolist()
+        for k, c in zip(keys_unique, counts):
+            if c:
+                self.n_items[k] = self.n_items.get(k, 0) + c
 
     def states(self):
         """Yields (key, registers_copy, n_items)."""

@@ -20,6 +20,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else every CPU of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
+def default_driver_memory() -> str | None:
+    """``SPARK_DRIVER_MEM``, else half of the host's ``MemTotal`` (None
+    when ``/proc/meminfo`` is unreadable: Spark's own default holds)."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{kib // 2048}m"
+
+
 def get_spark(app: str = "gostatix-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               max_partition_bytes: str = "128m",
@@ -35,8 +54,11 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
     sizes its GC/JIT/netty/ForkJoin pools for N cores — the same
     mechanism container runtimes use for a real N-core executor.
     ``local[N]`` alone caps only task slots; the JVM's service threads
-    otherwise assume all 32 host CPUs. Only honored at JVM launch (the
-    first session in a process)."""
+    otherwise assume all host CPUs. Only honored at JVM launch (the
+    first session in a process).
+
+    ``cores`` defaults to :func:`default_cores`, the driver heap to
+    :func:`default_driver_memory`."""
     # Pin glibc's mmap threshold before the JVM (and, transitively, the
     # python worker daemon) is launched. Arrow/netty direct buffers and
     # numpy batch arrays above the default ~128 KB threshold otherwise
@@ -53,7 +75,7 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
                        ("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))):
         os.environ.setdefault(_var, _val)
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores)
     builder = (
@@ -76,7 +98,6 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(arrow_batch_rows))
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.python.worker.reuse", "true")
         # Preload pandas/pyarrow/kernels in the worker daemon so each
         # forked worker inherits them via fork COW (guide §4.3; see
@@ -93,6 +114,9 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
                        if os.environ.get("PYTHONPATH") else [])))
         .config("spark.ui.enabled", "false")
     )
+    driver_memory = default_driver_memory()
+    if driver_memory is not None:
+        builder = builder.config("spark.driver.memory", driver_memory)
     if active_processors is not None:
         builder = builder.config(
             "spark.driver.extraJavaOptions",

@@ -56,8 +56,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gostatix_spark.agg import _Spec, _build_partials, _merge_partials, \
-    infer_element
+from gostatix_spark.agg import _merge, _partials
 
 __all__ = ["incremental_sketch_sink", "sketch_stream_query",
            "load_sketch_state", "PointerStore", "LocalPointerStore",
@@ -349,12 +348,10 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
                 " the query at a new state_path.")
         if not batch_df.head(1):
             return  # empty micro-batch: state unchanged
-        el = infer_element(batch_df, value_col, element)
-        spec = _Spec.make(kind, **sketch_params)
         key_cols = [key_col] if key_col else []
         cols = key_cols + ["state", "n_items"]
-        partials = _build_partials(batch_df, spec, value_col, key_col, el) \
-            .select(*cols)
+        partials = _partials(batch_df, kind, value_col, key_col=key_col,
+                             element=element, **sketch_params).select(*cols)
         kb = _bucket_col(key_col, n_state_buckets)
         if key_col:
             # the touched-bucket probe and the merge both consume the
@@ -375,7 +372,7 @@ def incremental_sketch_sink(kind: str, value_col: str, state_path: str, *,
             # partition-pruned state read: ONLY the touched buckets
             current = spark.read.parquet(*cur_paths).select(*cols)
             inp = inp.unionByName(current)
-        merged = _merge_partials(inp, key_col, None, merge_buckets) \
+        merged = _merge(inp, key_cols, None, merge_buckets) \
             .select(*key_cols, "state", "n_items", "n_partials") \
             .withColumn("kb", kb if key_col else F.lit(0))
         new_version = (version or 0) + 1

@@ -406,6 +406,33 @@ class TestMultiSketchAgg:
                 sketch_from_bytes(bytes(r["state"])))
 
 
+class TestNullElements:
+    @pytest.mark.parametrize("kind,params", [
+        ("hll", {"m": 256}),
+        ("bloom", {"n": 300, "eps": 0.01}),
+        ("cms", {"d": 3, "w": 64}),
+    ])
+    @pytest.mark.parametrize("sql_type,zero,key_col", [
+        ("bigint", "0", "g"),
+        ("string", "''", None),
+    ])
+    def test_nulls_build_the_null_free_state(self, spark, kind, params,
+                                             sql_type, zero, key_col):
+        """A null value is skipped, not hashed as INT64_MIN or ''."""
+        df = spark.range(300).selectExpr(
+            "id % 3 AS g",
+            f"CASE WHEN id % 7 = 0 THEN NULL WHEN id % 11 = 0 THEN {zero}"
+            f" ELSE CAST(id % 50 AS {sql_type}) END AS v")
+
+        def build(d):
+            return {r[key_col] if key_col else None:
+                    (bytes(r["state"]), r["n_items"])
+                    for r in sketch_agg(d, kind, "v", key_col=key_col,
+                                        **params).collect()}
+
+        assert build(df) == build(df.where("v IS NOT NULL"))
+
+
 class TestElementKinds:
     def test_token_array_element_dedup_semantics(self, spark, corpus):
         # whole-array membership: every full token array is in the bloom

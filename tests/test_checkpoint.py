@@ -2,6 +2,7 @@
 partitions → resume → final state identical to the uninterrupted run;
 lineage columns present."""
 
+import os
 import tempfile
 
 import numpy as np
@@ -96,3 +97,17 @@ def test_two_kinds_share_one_path(spark, corpus):
         st = sketch_from_bytes(bytes(rows[0]["state"]))
         direct = sketch_agg(corpus, "cms", "tokens", d=3, w=500).collect()
         assert bytes(rows[0]["state"]) == bytes(direct[0]["state"])
+
+
+def test_unreadable_checkpoint_raises(spark, corpus):
+    """A checkpoint path that exists but is not parquet must fail the
+    build, not silently rerun phase 1 and append to it."""
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/cp"
+        os.makedirs(path)
+        with open(f"{path}/part-00000.parquet", "w") as f:
+            f.write("not parquet")
+        with pytest.raises(Exception, match="(?i)parquet|footer|schema"):
+            checkpointed_sketch_agg(corpus, "hll", "tokens",
+                                    checkpoint_path=path, m=256).collect()
+        assert os.listdir(path) == ["part-00000.parquet"]
