@@ -16,6 +16,7 @@ Settings rationale (100 TB design, tested on local[N]):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +38,39 @@ def default_driver_memory() -> str | None:
     except (OSError, StopIteration, ValueError):
         return None
     return f"{kib // 2048}m"
+
+
+def spark_defaults(key: str) -> str | None:
+    """``key`` as set in ``spark-defaults.conf`` (``SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``), None when unset or unreadable. Read before the
+    JVM exists, so a builder ``.config`` of the same key can merge it
+    instead of shadowing it."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if not conf_dir:
+        from pyspark.find_spark_home import _find_spark_home
+        conf_dir = os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    value = None
+    for line in lines:  # java.util.Properties: key, then '=', ':' or blanks
+        m = re.match(r"\s*([^\s=:#!][^\s=:]*)\s*[=:\s]\s*(.*?)\s*$", line)
+        if m and m.group(1) == key:
+            value = m.group(2)
+    return value
+
+
+def executor_pythonpath(*paths: str | None) -> str:
+    """The ``os.pathsep``-joined entries of ``paths`` in order, each once;
+    unset or empty ones are skipped."""
+    entries: list[str] = []
+    for path in paths:
+        for entry in (path or "").split(os.pathsep):
+            if entry and entry not in entries:
+                entries.append(entry)
+    return os.pathsep.join(entries)
 
 
 def get_spark(app: str = "gostatix-spark", cores: int | None = None,
@@ -105,13 +139,13 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
         # and a cold import was measured at 0.7 s CPU per fork on slow
         # hosts). executorEnv.PYTHONPATH makes the package importable
         # by the daemon process itself (workers get sys.path from the
-        # worker-startup protocol, the daemon does not).
+        # worker-startup protocol, the daemon does not); a PYTHONPATH
+        # from spark-defaults.conf or the driver's env is kept after it.
         .config("spark.python.daemon.module", "gostatix_spark.daemon_preload")
-        .config("spark.executorEnv.PYTHONPATH",
-                os.pathsep.join(
-                    [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
-                    + ([os.environ["PYTHONPATH"]]
-                       if os.environ.get("PYTHONPATH") else [])))
+        .config("spark.executorEnv.PYTHONPATH", executor_pythonpath(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            spark_defaults("spark.executorEnv.PYTHONPATH"),
+            os.environ.get("PYTHONPATH")))
         .config("spark.ui.enabled", "false")
     )
     driver_memory = default_driver_memory()
