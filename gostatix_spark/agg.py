@@ -17,18 +17,25 @@ fold and ONE phase-2 merge (SURVEY.md §3, §4.2):
   ``O(num_partitions × num_keys)`` sketch-sized rows — skew-immune by
   construction.
 * **Phase 2 (merge)** — :func:`_merge`, ``groupBy(key cols)
-  .applyInPandas``: decode partial states, fold with the sketch's merge
-  law (max for HLL, add for CMS, OR for Bloom; proven
-  associative/commutative in tests), emit one row per key. For very
-  wide fan-in an optional intermediate level merges ``partition_id %
-  tree_fanout`` groups first (a partial reduce) — merge associativity
-  makes the tree shape irrelevant to the result.
+  .applyInArrow``: each group arrives as an Arrow table, is grouped in
+  Arrow (no pandas), its partial states are folded with the sketch's
+  merge law (max for HLL, add for CMS, OR for Bloom; proven
+  associative/commutative in tests) and one row per key comes back.
+  For very wide fan-in an intermediate level merges ``partition_id %
+  tree_fanout`` groups first (a partial reduce). It is planned only
+  when the fold's input has more than ``tree_fanout`` partitions —
+  with fewer, each salt group would hold a single partial. Merge
+  associativity makes the tree shape irrelevant to the result.
 
 The cuckoo filter is NOT mergeable (order-dependent kick loop,
 ``cuckoo_filter.go:74-115``) — see :func:`cuckoo_build`: phase 1 only
-*hashes* elements (pure, parallel, vectorized), then elements shuffle to
-their (key, shard) and a single task per shard runs the sequential
-kernel. Sharding is the scale path: membership routes to the owning
+*hashes* elements (pure, parallel, vectorized) and packs each
+partition's murmur3 ``h1``s into one uint64 block per (key?, shard),
+every shard pre-seeded; the blocks shuffle to their (key, shard) and a
+single ``applyInArrow`` task per shard concatenates them in
+``partition_id`` order and runs the sequential kernel. That order makes
+a state a function of the input's partitioning, not of shuffle fetch
+order. Sharding is the scale path: membership routes to the owning
 shard by the same hash, so N shards build and probe in parallel.
 
 Element extraction is Arrow-native: list columns are flattened via
@@ -47,8 +54,8 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, BooleanType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from gostatix_spark import hashing, params
 from gostatix_spark.kernels import bloom, cms, cuckoo, hll, kll, tdigest, topk
@@ -607,18 +614,43 @@ def _to_arrow_schema(st: StructType) -> pa.Schema:
 # ---------------------------------------------------------------------------
 
 
+def _merge_groups(table: pa.Table, group_cols: list[str],
+                  schema: pa.Schema) -> pa.Table:
+    """One row per ``group_cols`` group of an Arrow table of partials:
+    the states folded by :func:`merge_sketch_states` in row order,
+    ``n_items`` summed and ``n_partials`` summed (counted when the input
+    rows are phase-1 partials, which carry none)."""
+    counted = "n_partials" in table.column_names
+    g = table.group_by(group_cols, use_threads=False).aggregate(
+        [("state", "list"), ("n_items", "sum"),
+         ("n_partials", "sum") if counted else ("n_items", "count")])
+    cols = {c: g[c] for c in group_cols}
+    cols["state"] = pa.array([merge_sketch_states(blobs) for blobs in
+                              g["state_list"].to_pylist()], pa.binary())
+    cols["n_items"] = g["n_items_sum"]
+    cols["n_partials"] = g["n_partials_sum" if counted else "n_items_count"]
+    return pa.Table.from_arrays([cols[f.name] for f in schema], schema=schema)
+
+
 def _merge(partials: DataFrame, key_cols: list[str],
            tree_fanout: int | None = None,
-           merge_buckets: int | None = None) -> DataFrame:
+           merge_buckets: int | None = None,
+           source: DataFrame | None = None) -> DataFrame:
     """Phase 2 of every build: one row per ``key_cols`` group,
-    ``[*key_cols, state, n_items, n_partials]``.
+    ``[*key_cols, state, n_items, n_partials]``, merged by
+    ``groupBy(...).applyInArrow`` with no pandas in between.
 
     ``tree_fanout`` adds an intermediate level that merges within
     (key, ``partition_id % tree_fanout``) first — the partial-reduce
-    pattern for wide fan-in. ``merge_buckets`` hashes keys into that
-    many groups so each ``applyInPandas`` call merges many fine-grained
-    keys in a tight loop instead of paying ~ms of pandas overhead per
-    key."""
+    pattern for wide fan-in. It is planned only when ``source``, the
+    fold's input, has more than ``tree_fanout`` partitions: with fewer,
+    every salt group holds a single partial and the level would only
+    decode and re-encode it. The count is ``source.rdd
+    .getNumPartitions()`` — cached on a reused DataFrame, whereas
+    asking the fresh partials would plan the scan again.
+    ``merge_buckets`` hashes keys into that many groups so each call
+    merges many fine-grained keys in one Arrow ``group_by`` instead of
+    paying a Python call per key."""
     glob = not key_cols
     if glob:
         partials = partials.withColumn("_g", F.lit(1))
@@ -627,37 +659,29 @@ def _merge(partials: DataFrame, key_cols: list[str],
         StructField("state", BinaryType(), False),
         StructField("n_items", LongType(), False),
         StructField("n_partials", LongType(), False)])
+    out_arrow = _to_arrow_schema(out_schema)
 
-    def merged(pdf: pd.DataFrame, cols: list[str]) -> dict:
-        return {**{c: pdf[c].iloc[0] for c in cols},
-                "state": merge_sketch_states(pdf["state"].tolist()),
-                "n_items": int(pdf["n_items"].sum()),
-                "n_partials": int(pdf["n_partials"].sum()
-                                  if "n_partials" in pdf else len(pdf))}
-
-    if tree_fanout:
+    if tree_fanout and source.rdd.getNumPartitions() > tree_fanout:
         salted = key_cols + ["_salt"]
+        salted_schema = StructType(out_schema.fields + [
+            StructField("_salt", IntegerType(), False)])
+        salted_arrow = _to_arrow_schema(salted_schema)
         partials = (partials
                     .withColumn("_salt", (F.col("partition_id") % tree_fanout)
                                 .cast("int"))
                     .groupBy(*salted)
-                    .applyInPandas(
-                        lambda pdf: pd.DataFrame([merged(pdf, salted)]),
-                        StructType(out_schema.fields
-                                   + [StructField("_salt", IntegerType(),
-                                                  False)])))
+                    .applyInArrow(lambda t: _merge_groups(t, salted,
+                                                          salted_arrow),
+                                  salted_schema))
     if merge_buckets and not glob:
         out = (partials
                .withColumn("_kb", F.pmod(F.hash(*key_cols),
                                          F.lit(merge_buckets)))
-               .groupBy("_kb")
-               .applyInPandas(lambda pdf: pd.DataFrame(
-                   [merged(g, key_cols) for _, g in
-                    pdf.groupby(key_cols, dropna=False, sort=False)]),
-                   out_schema))
+               .groupBy("_kb"))
     else:
-        out = partials.groupBy(*key_cols).applyInPandas(
-            lambda pdf: pd.DataFrame([merged(pdf, key_cols)]), out_schema)
+        out = partials.groupBy(*key_cols)
+    out = out.applyInArrow(lambda t: _merge_groups(t, key_cols, out_arrow),
+                           out_schema)
     return out.drop("_g") if glob else out
 
 
@@ -710,7 +734,7 @@ def sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     if _return_partials:
         return partials
     return _merge(partials, [key_col] if key_col else [], tree_fanout,
-                  merge_buckets)
+                  merge_buckets, source=df)
 
 
 def multi_sketch_agg(df: DataFrame, jobs: list[dict],
@@ -731,61 +755,97 @@ def multi_sketch_agg(df: DataFrame, jobs: list[dict],
              j["value_col"], name=j["name"], key_col=j.get("key_col"))
         for j in jobs]
     partials = _fold(df, fold_jobs, StructField("key", StringType(), True))
-    return _merge(partials, ["sketch_name", "key"], tree_fanout)
+    return _merge(partials, ["sketch_name", "key"], tree_fanout, source=df)
 
 
-def _element_hashes_df(df: DataFrame, value_col: str, key_col: str | None,
-                       element: str, n_shards: int) -> DataFrame:
-    """Phase-1 hash extraction shared by the cuckoo build / remove / probe
-    paths: ``[key?, h1 long, shard int, _real bool]`` where ``shard =
-    shard_of(h1, n_shards)`` (splitmix-mixed — see
-    :func:`gostatix_spark.hashing.shard_of`; raw ``h1 % n_shards`` would
-    share low bits with the in-filter addressing ``i1 = h1 % size``,
-    leaving only 1/n_shards of each shard's buckets reachable).
-    ``_real`` is always TRUE here; sentinel rows union FALSE."""
-    key_cols = [key_col] if key_col else []
-    hash_schema = StructType(
+def _hash_blocks(df: DataFrame, value_col: str, key_col: str | None,
+                 element: str, n_shards: int) -> DataFrame:
+    """Phase 1 of the cuckoo build and removals: ONE ``mapInArrow`` that
+    packs a partition's murmur3 ``h1``s into one block per (key?,
+    shard), little-endian uint64 bytes in row order. Returns ``[key?,
+    shard int, partition_id int, hashes binary]``.
+
+    Every shard is pre-seeded: an unkeyed partition emits all
+    ``n_shards`` rows, a keyed one all ``n_shards`` rows of every key it
+    saw (a null key included), so a shard that received no element still
+    gets a state row — probes route by ``shard_of`` and a missing shard
+    would misindex every lookup. ``shard = shard_of(h1, n_shards)`` is
+    splitmix-mixed (see :func:`gostatix_spark.hashing.shard_of`): raw
+    ``h1 % n_shards`` would share low bits with the in-filter addressing
+    ``i1 = h1 % size``, leaving only 1/n_shards of each shard's buckets
+    reachable."""
+    out_schema = StructType(
         ([df.schema[key_col]] if key_col else [])
-        + [StructField("h1", LongType(), False),
-           StructField("shard", IntegerType(), False),
-           StructField("_real", BooleanType(), False)])
+        + [StructField("shard", IntegerType(), False),
+           StructField("partition_id", IntegerType(), False),
+           StructField("hashes", BinaryType(), False)])
+    arrow_schema = _to_arrow_schema(out_schema)
 
-    def hash_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+        pid = TaskContext.get().partitionId()
+        # (key, shard) -> h1 arrays in row order; dict order = emit order
+        blocks: dict = {} if key_col else {(None, s): [] for s in
+                                             range(n_shards)}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             h1, _, rowmap = extract_hashes(batch.column(value_col), element,
                                            "murmur3")
-            cols = {"h1": pa.array(h1.astype(np.int64)),
-                    "shard": pa.array(
-                        hashing.shard_of(h1, n_shards).astype(np.int32)),
-                    "_real": pa.array(np.ones(len(h1), dtype=bool))}
+            keys, codes = [None], np.zeros(len(h1), np.int64)
             if key_col:
-                karr = batch.column(key_col)
-                if rowmap is not None:
-                    karr = karr.take(pa.array(rowmap))
-                cols[key_col] = karr
-            yield pa.RecordBatch.from_pydict(
-                {f.name: cols[f.name] for f in hash_schema.fields},
-                schema=_to_arrow_schema(hash_schema))
+                enc = pa.compute.dictionary_encode(batch.column(key_col),
+                                                   null_encoding="encode")
+                keys = enc.dictionary.to_pylist()
+                codes = enc.indices.to_numpy(zero_copy_only=False) \
+                    .astype(np.int64)
+                codes = codes if rowmap is None else codes[rowmap]
+                for key in keys:
+                    for s in range(n_shards):
+                        blocks.setdefault((key, s), [])
+            group = codes * n_shards + hashing.shard_of(h1, n_shards)
+            order = np.argsort(group, kind="stable")
+            for sel in np.split(order, np.flatnonzero(
+                    np.diff(group[order])) + 1):
+                if len(sel):
+                    g = int(group[sel[0]])
+                    blocks[(keys[g // n_shards], g % n_shards)].append(h1[sel])
+        if not blocks:
+            return
+        cols = {"shard": pa.array([s for _, s in blocks], pa.int32()),
+                "partition_id": pa.array([pid] * len(blocks), pa.int32()),
+                "hashes": pa.array(
+                    [np.concatenate(hs).astype("<u8", copy=False).tobytes()
+                     if hs else b"" for hs in blocks.values()], pa.binary())}
+        if key_col:
+            cols[key_col] = pa.array([k for k, _ in blocks],
+                                     arrow_schema.field(key_col).type)
+        yield from pa.Table.from_pydict(
+            {f.name: cols[f.name] for f in arrow_schema},
+            schema=arrow_schema).to_batches()
 
-    return df.select(*key_cols, value_col).mapInArrow(hash_fn, hash_schema)
+    return (df.select(*([key_col] if key_col else []), value_col)
+            .mapInArrow(fn, out_schema))
 
 
-def _shard_sentinels(df: DataFrame, key_col: str | None,
-                     n_shards: int) -> DataFrame:
-    """One ``_real=FALSE`` row per (key?, shard) so groupBy emits a state
-    row even for shards that received zero elements — probes route by
-    ``shard_of`` and a missing shard would misindex every lookup."""
-    spark = df.sparkSession
-    shards = spark.range(n_shards).select(
-        F.col("id").cast("int").alias("shard"))
-    base = (df.select(key_col).distinct().crossJoin(shards)
-            if key_col else shards)
-    return (base
-            .withColumn("h1", F.lit(0).cast("long"))
-            .withColumn("_real", F.lit(False))
-            .select(*([key_col] if key_col else []), "h1", "shard", "_real"))
+def _packed_h1(blocks: pa.Table) -> np.ndarray:
+    """The ``hashes`` blocks of one (key?, shard) group, concatenated in
+    ``partition_id`` order, as uint64 ``h1``s — so a state depends on the
+    input's partitioning only, not on shuffle fetch order."""
+    if not blocks.num_rows:
+        return np.zeros(0, np.uint64)
+    values, offsets = _arrow_var_bytes(
+        blocks.sort_by("partition_id")["hashes"].combine_chunks())
+    return values[offsets[0]:offsets[-1]].view("<u8").astype(np.uint64)
+
+
+def _shard_state(group: pa.Table, key_cols: list[str], state: CuckooState,
+                 n_items: int, schema: pa.Schema) -> pa.Table:
+    """The one ``[key?, shard, state, n_items]`` row of a shard group."""
+    cols = {c: group[c].slice(0, 1) for c in key_cols + ["shard"]}
+    cols["state"] = pa.array([state.to_bytes()], pa.binary())
+    cols["n_items"] = pa.array([n_items], pa.int64())
+    return pa.Table.from_arrays([cols[f.name] for f in schema], schema=schema)
 
 
 def cuckoo_shard_size(n_rows: int, n_shards: int, bucket_size: int = 4) -> int:
@@ -810,17 +870,27 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
                  seed: int = 42) -> DataFrame:
     """Distributed cuckoo-filter build (SURVEY.md §3.3).
 
-    Phase 1 (parallel, vectorized): hash every element. Phase 2: shuffle
-    the 8-byte hashes to their (key, shard) and run the sequential
-    insert kernel once per shard — the kernel itself is numpy-array
-    based. ``n_shards > 1`` splits each key's filter into independent
-    shards by ``shard_of(h1)``; lookups and removals route the same way
+    Phase 1 (parallel, vectorized): one ``mapInArrow`` hashes every
+    element and packs each partition's ``h1``s into one block per
+    (key?, shard) (:func:`_hash_blocks`). Phase 2: the blocks shuffle to
+    their (key, shard) and ``applyInArrow`` runs the sequential insert
+    kernel once per shard over the blocks in ``partition_id`` order —
+    the kernel itself is numpy-array based, and a state is the same
+    bytes on every run over the same partitioning. ``n_shards > 1``
+    splits each key's filter into independent shards by
+    ``shard_of(h1)``; lookups and removals route the same way
     (:func:`gostatix_spark.query.cuckoo_contains`,
     :func:`cuckoo_apply_removals`), so build, delete and probe
     parallelize across shards. Size is rounded to a power of two so the
-    XOR partner map is involutive (policy SURVEY.md §1.6.5). Every
-    shard emits a row even when empty (zero-element shards are states,
-    not absent rows).
+    XOR partner map is involutive (policy SURVEY.md §1.6.5).
+
+    Every shard emits a row even when empty (zero-element shards are
+    states, not absent rows): each partition pre-seeds every shard, and
+    a keyed build every shard of each key the partition saw (a null key
+    included). So a keyed build ships keys-seen × ``n_shards`` rows per
+    partition — it suits filter-per-key cardinalities, not a key per
+    row. An input with no partitions at all (a scan pruned to nothing
+    at planning) runs no phase-1 task and returns no rows.
 
     ``size`` is the per-shard bucket count when given; else it is
     derived from the expected element count ``n`` (pass it when known —
@@ -841,28 +911,22 @@ def cuckoo_build(df: DataFrame, value_col: str, *,
         fp_len = params.cuckoo_fingerprint_length(size, eps)
 
     key_cols = [key_col] if key_col else []
-    hashes = _element_hashes_df(df, value_col, key_col, element, n_shards) \
-        .unionByName(_shard_sentinels(df, key_col, n_shards))
-
     out_schema = StructType(
         ([df.schema[key_col]] if key_col else [])
         + [StructField("shard", IntegerType(), False),
            StructField("state", BinaryType(), False),
            StructField("n_items", LongType(), False)])
+    out_arrow = _to_arrow_schema(out_schema)
 
-    def build_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        real = pdf[pdf["_real"]]
-        h1 = real["h1"].to_numpy().astype(np.int64).view(np.uint64)
+    def build_fn(blocks: pa.Table) -> pa.Table:
+        h1 = _packed_h1(blocks)
         f = cuckoo.CuckooFilter(size, bucket_size, fp_len, retries, seed=seed)
         f.bulk_insert_hashes(h1)
         st = CuckooState(size, bucket_size, fp_len, retries, f.length, f.buckets)
-        row = {"shard": int(pdf["shard"].iloc[0]),
-               "state": st.to_bytes(), "n_items": len(h1)}
-        for kc in key_cols:
-            row[kc] = pdf[kc].iloc[0]
-        return pd.DataFrame([row])
+        return _shard_state(blocks, key_cols, st, len(h1), out_arrow)
 
-    return hashes.groupBy(*key_cols, "shard").applyInPandas(build_fn, out_schema)
+    return (_hash_blocks(df, value_col, key_col, element, n_shards)
+            .groupBy(*key_cols, "shard").applyInArrow(build_fn, out_schema))
 
 
 def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
@@ -870,11 +934,12 @@ def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
                           key_col: str | None = None,
                           element: str | None = None) -> DataFrame:
     """Distributed ``Remove`` (``cuckoo_filter.go:128-144``) over a
-    sharded build: hash the removal elements (vectorized, parallel),
-    route each to its owning shard by the build's ``shard_of`` rule,
-    and apply the vectorized batch-remove kernel inside a cogrouped
-    ``applyInPandas`` — one task per (key?, shard), no element ever
-    touches the driver.
+    sharded build: hash the removal elements into packed blocks like
+    the build's (vectorized, parallel), route each to its owning shard
+    by the build's ``shard_of`` rule, and apply the vectorized
+    batch-remove kernel inside a cogrouped ``applyInArrow`` — one task
+    per (key?, shard), blocks in ``partition_id`` order, no element
+    ever touches the driver.
 
     ``states`` is :func:`cuckoo_build` output; ``removals`` is any
     DataFrame with ``value_col`` (and ``key_col`` when the build was
@@ -884,39 +949,32 @@ def cuckoo_apply_removals(states: DataFrame, removals: DataFrame,
     elements are no-ops, as in the reference)."""
     element = infer_element(removals, value_col, element)
     key_cols = [key_col] if key_col else []
-    hashes = _element_hashes_df(removals, value_col, key_col, element,
-                                n_shards)
     out_schema = StructType(
         ([states.schema[key_col]] if key_col else [])
         + [StructField("shard", IntegerType(), False),
            StructField("state", BinaryType(), False),
            StructField("n_items", LongType(), False)])
-    out_cols = key_cols + ["shard", "state", "n_items"]
+    out_arrow = _to_arrow_schema(out_schema)
 
-    def apply_fn(spdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(spdf):
+    def apply_fn(built: pa.Table, blocks: pa.Table) -> pa.Table:
+        if not built.num_rows:
             # removals routed to a (key, shard) with no built state:
             # nothing to remove from
-            return pd.DataFrame(columns=out_cols)
-        st: CuckooState = sketch_from_bytes(bytes(spdf["state"].iloc[0]))
+            return out_arrow.empty_table()
+        st: CuckooState = sketch_from_bytes(built["state"][0].as_py())
         f = cuckoo.CuckooFilter(st.size, st.bucket_size, st.fp_len,
                                 st.retries, buckets=st.buckets,
                                 length=st.length)
-        n_removed = 0
-        if len(rpdf):
-            h1 = rpdf["h1"].to_numpy().astype(np.int64).view(np.uint64)
-            n_removed = int(f.bulk_remove_hashes(h1).sum())
+        n_removed = int(f.bulk_remove_hashes(_packed_h1(blocks)).sum())
         new = CuckooState(st.size, st.bucket_size, st.fp_len, st.retries,
                           f.length, f.buckets)
-        row = {"shard": int(spdf["shard"].iloc[0]), "state": new.to_bytes(),
-               "n_items": int(spdf["n_items"].iloc[0]) - n_removed}
-        for kc in key_cols:
-            row[kc] = spdf[kc].iloc[0]
-        return pd.DataFrame([row])
+        return _shard_state(built, key_cols, new,
+                            built["n_items"][0].as_py() - n_removed, out_arrow)
 
+    blocks = _hash_blocks(removals, value_col, key_col, element, n_shards)
     return (states.groupBy(*key_cols, "shard")
-            .cogroup(hashes.groupBy(*key_cols, "shard"))
-            .applyInPandas(apply_fn, out_schema))
+            .cogroup(blocks.groupBy(*key_cols, "shard"))
+            .applyInArrow(apply_fn, out_schema))
 
 
 def bloom_build_sharded(df: DataFrame, value_col: str, *,
@@ -942,4 +1000,4 @@ def bloom_build_sharded(df: DataFrame, value_col: str, *,
                       n=n_per, eps=eps)
     partials = _fold(df, [_Job(spec, value_col, n_shards=n_shards)],
                      StructField("shard", IntegerType(), False))
-    return _merge(partials, ["shard"], tree_fanout)
+    return _merge(partials, ["shard"], tree_fanout, source=df)

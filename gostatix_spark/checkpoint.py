@@ -100,4 +100,4 @@ def checkpointed_sketch_agg(df: DataFrame, kind: str, value_col: str, *,
     # one contribution per partition (idempotent re-runs may append dupes)
     keyc = [key_col] if key_col else []
     dedup = all_partials.dropDuplicates(keyc + ["partition_id"])
-    return _merge(dedup, keyc, tree_fanout)
+    return _merge(dedup, keyc, tree_fanout, source=df)

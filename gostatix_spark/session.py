@@ -93,21 +93,6 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
 
     ``cores`` defaults to :func:`default_cores`, the driver heap to
     :func:`default_driver_memory`."""
-    # Pin glibc's mmap threshold before the JVM (and, transitively, the
-    # python worker daemon) is launched. Arrow/netty direct buffers and
-    # numpy batch arrays above the default ~128 KB threshold otherwise
-    # go through mmap/munmap on EVERY alloc/free cycle; with 32 task
-    # threads that serializes on the kernel's mmap_lock — measured here
-    # as 50+ s of system time on a single keyed-sketch query, plus
-    # hypervisor steal from the TLB-shootdown storm (guide §5: memory
-    # behavior is part of the operator's cost). Serving those from the
-    # arena instead cut the suite's sys time 5-8× on the heavy queries.
-    # Trade-off: freed arena memory is retained up to the trim
-    # threshold (RSS grows toward the high-water mark) — right for a
-    # dedicated executor host, overridable via the environment.
-    for _var, _val in (("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024)),
-                       ("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))):
-        os.environ.setdefault(_var, _val)
     if cores is None:
         cores = default_cores()
     if shuffle_partitions is None:
@@ -155,4 +140,26 @@ def get_spark(app: str = "gostatix-spark", cores: int | None = None,
         builder = builder.config(
             "spark.driver.extraJavaOptions",
             f"-XX:ActiveProcessorCount={int(active_processors)}")
-    return builder.getOrCreate()
+    # Pin glibc's mmap threshold before the JVM (and, transitively, the
+    # python worker daemon) is launched. Arrow/netty direct buffers and
+    # numpy batch arrays above the default ~128 KB threshold otherwise
+    # go through mmap/munmap on EVERY alloc/free cycle; with 32 task
+    # threads that serializes on the kernel's mmap_lock — measured here
+    # as 50+ s of system time on a single keyed-sketch query, plus
+    # hypervisor steal from the TLB-shootdown storm (guide §5: memory
+    # behavior is part of the operator's cost). Serving those from the
+    # arena instead cut the suite's sys time 5-8× on the heavy queries.
+    # Trade-off: freed arena memory is retained up to the trim
+    # threshold (RSS grows toward the high-water mark) — right for a
+    # dedicated executor host, overridable via the environment. Only
+    # the JVM launch sees the pinned values: the ones the caller had not
+    # set are taken out of os.environ again once getOrCreate returns.
+    unset = [var for var in ("MALLOC_MMAP_THRESHOLD_",
+                             "MALLOC_TRIM_THRESHOLD_")
+             if var not in os.environ]
+    os.environ.update({var: str(512 * 1024 * 1024) for var in unset})
+    try:
+        return builder.getOrCreate()
+    finally:
+        for var in unset:
+            os.environ.pop(var, None)

@@ -19,7 +19,7 @@ Execution shape (all distributed — nothing is collected to the driver):
   map-side combine, skew-immune);
 * the state table is KEY-BUCKET-PARTITIONED (``bucket =
   pmod(xxhash64(key), n_state_buckets)``); only the buckets touched by
-  the micro-batch are read, merged (``groupBy.applyInPandas``) and
+  the micro-batch are read, merged (``groupBy.applyInArrow``) and
   rewritten. Untouched buckets are carried forward by MANIFEST
   reference — no data is copied or rewritten for them, so steady-state
   commit cost is O(touched buckets), not O(total state) (the round-2

@@ -117,11 +117,15 @@ class TestHLLAgg:
         assert np.array_equal(regs[1], regs[2])
 
     def test_tree_merge_same_result(self, spark, corpus):
+        # 8 input partitions > fanout 3, so the salted level is planned
         a = sketch_agg(corpus, "hll", "tokens", m=1024)
         b = sketch_agg(corpus, "hll", "tokens", m=1024, tree_fanout=3)
-        ra = sketch_from_bytes(bytes(a.collect()[0]["state"])).registers
-        rb = sketch_from_bytes(bytes(b.collect()[0]["state"])).registers
-        assert np.array_equal(ra, rb)
+        plan = b._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 2, plan
+        ra, rb = a.collect()[0], b.collect()[0]
+        assert bytes(ra["state"]) == bytes(rb["state"])
+        assert ra["n_partials"] == rb["n_partials"] == 8
+        assert ra["n_items"] == rb["n_items"]
 
 
 class TestCMSInnerProduct:

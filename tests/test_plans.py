@@ -29,7 +29,7 @@ def test_sketch_agg_single_exchange(spark):
     states = sketch_agg(events, "hll", "user_id", key_col="event_type", m=1024)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
     # column pruning: the scan reads only the two referenced columns
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
@@ -77,7 +77,7 @@ def test_bloom_sharded_single_exchange(spark):
                                  n_shards=8)
     plan = _plan(states)
     assert plan.count("Exchange") == 1, plan
-    assert "MapInArrow" in plan and "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) \
         == {"doc_id"}
@@ -95,8 +95,46 @@ def test_cuckoo_removals_cogroup_no_extra_exchange(spark):
     plan = _plan(after)
     # one Exchange per cogroup side for the states (build: hashes →
     # shard groups) and one for the removal hashes
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     assert plan.count("Exchange") <= 3, plan
+
+
+def test_cuckoo_build_single_exchange_no_sentinels(spark):
+    """Phase 1 pre-seeds every shard in its own packed hash blocks, so
+    the build is one MapInArrow, one Exchange and one grouped apply —
+    no Range of sentinel shards and no Union."""
+    from gostatix_spark.agg import cuckoo_build
+    supp = spark.read.parquet(f"{SF}/supplier.parquet")
+    for key_col in (None, "s_nationkey"):
+        plan = _plan(cuckoo_build(supp, "s_suppkey", key_col=key_col,
+                                  n_shards=4, eps=0.01))
+        assert plan.count("Exchange") == 1, plan
+        assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
+        assert "Range" not in plan and "Union" not in plan, plan
+
+
+def test_tree_level_only_when_partitions_exceed_fanout(spark):
+    """With no more input partitions than ``tree_fanout`` every salt
+    group holds one partial: the level is not planned (one Exchange)
+    and the states equal the build without a fanout."""
+    from gostatix_spark.agg import multi_sketch_agg
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    assert events.rdd.getNumPartitions() <= 8
+    jobs = [{"name": "hll", "kind": "hll", "value_col": "user_id",
+             "key_col": "event_type", "params": {"m": 1024}},
+            {"name": "bloom", "kind": "bloom", "value_col": "user_id",
+             "params": {"n": 1000, "eps": 0.01}}]
+    for build in (
+            lambda fanout: sketch_agg(events, "hll", "user_id",
+                                      key_col="event_type", m=1024,
+                                      tree_fanout=fanout),
+            lambda fanout: multi_sketch_agg(events, jobs,
+                                            tree_fanout=fanout)):
+        states = build(8)
+        assert _plan(states).count("Exchange") == 1, _plan(states)
+        rows = [sorted(tuple(r) for r in df.collect())
+                for df in (states, build(None))]
+        assert rows[0] == rows[1]
 
 
 def test_sampling_ops_shuffle_free_pruned(spark):

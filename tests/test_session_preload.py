@@ -127,6 +127,35 @@ def test_daemon_reports_failed_preloads(capsys):
     assert "numpy" not in err
 
 
+MALLOC_VARS = ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_")
+
+
+class RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: ``getOrCreate`` returns
+    the collected conf and records the malloc variables the JVM launch
+    would inherit (or raises ``fail``)."""
+
+    def __init__(self, fail: Exception | None = None):
+        self.conf = {}
+        self.fail = fail
+        self.launch_env = None
+
+    def master(self, _):
+        return self
+
+    appName = master
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        self.launch_env = {var: os.environ.get(var) for var in MALLOC_VARS}
+        if self.fail:
+            raise self.fail
+        return self.conf
+
+
 def test_executor_pythonpath_merges_spark_defaults(tmp_path, monkeypatch):
     # a PYTHONPATH from spark-defaults.conf (and the driver's env) is
     # kept after the package root, each entry once, not overwritten
@@ -141,33 +170,37 @@ def test_executor_pythonpath_merges_spark_defaults(tmp_path, monkeypatch):
         f"spark.executorEnv.PYTHONPATH  /srv/site{os.pathsep}{pkg_root}\n")
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     monkeypatch.setenv("PYTHONPATH", f"/srv/env{os.pathsep}/srv/site")
-    for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
-        monkeypatch.setenv(var, os.environ.get(var, "0"))
     assert (session.spark_defaults("spark.executorEnv.PYTHONPATH")
             == f"/srv/site{os.pathsep}{pkg_root}")
     assert session.spark_defaults("spark.no.such.key") is None
 
-    class Builder:
-        def __init__(self):
-            self.conf = {}
-
-        def master(self, _):
-            return self
-
-        appName = master
-
-        def config(self, key, value):
-            self.conf[key] = value
-            return self
-
-        def getOrCreate(self):
-            return self.conf
-
     monkeypatch.setattr(session, "SparkSession",
-                        types.SimpleNamespace(builder=Builder()))
+                        types.SimpleNamespace(builder=RecordingBuilder()))
     conf = session.get_spark(cores=1)
     assert (conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
             == [pkg_root, "/srv/site", "/srv/env"])
+
+
+@pytest.mark.parametrize("fail", [None, RuntimeError("no JVM")])
+def test_malloc_env_scoped_to_jvm_launch(monkeypatch, fail):
+    # the JVM launch sees the pinned thresholds (a caller's own value
+    # wins); afterwards os.environ is the caller's again, launched or not
+    import types
+    from gostatix_spark import session
+    monkeypatch.delenv("MALLOC_MMAP_THRESHOLD_", raising=False)
+    monkeypatch.setenv("MALLOC_TRIM_THRESHOLD_", "12345")
+    builder = RecordingBuilder(fail)
+    monkeypatch.setattr(session, "SparkSession",
+                        types.SimpleNamespace(builder=builder))
+    if fail:
+        with pytest.raises(RuntimeError, match="no JVM"):
+            session.get_spark(cores=1)
+    else:
+        session.get_spark(cores=1)
+    assert builder.launch_env == {"MALLOC_MMAP_THRESHOLD_": str(512 << 20),
+                                  "MALLOC_TRIM_THRESHOLD_": "12345"}
+    assert "MALLOC_MMAP_THRESHOLD_" not in os.environ
+    assert os.environ["MALLOC_TRIM_THRESHOLD_"] == "12345"
 
 
 def _write_module_zip(path, version, padding=""):

@@ -13,13 +13,15 @@ comes from ``session.default_cores`` (``SPARK_GRAFT_CPUS``):
 * ``mapInArrow``     identity ``mapInArrow``
 * ``applyInPandas``  identity ``groupBy(k).applyInPandas`` (no shuffle:
                      the input's partitioning already clusters ``k``)
+* ``applyInArrow``   identity ``groupBy(k).applyInArrow``, the phase-2
+                     merge boundary of every sketch build
 
 Worker CPU is the user+system time of every Python process under this
 driver's JVM (the worker daemon, its live workers and the ones it has
 reaped), read from ``/proc`` before and after each job and divided by
 the job's completed tasks. A regression in the per-task bootstrap of
 the worker (imports, ``importlib.invalidate_caches``) shows up as
-``cpu_ms/task`` on the three Python cases while ``jvm`` stays near 0.
+``cpu_ms/task`` on the four Python cases while ``jvm`` stays near 0.
 """
 from __future__ import annotations
 
@@ -94,6 +96,8 @@ def _cases(df):
         "mapInArrow": lambda: df.mapInArrow(lambda it: it, df.schema),
         "applyInPandas": lambda: df.groupBy("k").applyInPandas(
             lambda pdf: pdf, df.schema),
+        "applyInArrow": lambda: df.groupBy("k").applyInArrow(
+            lambda table: table, df.schema),
     }
 
 
